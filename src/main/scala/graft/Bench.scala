@@ -21,8 +21,6 @@ import graft.ops.SpatialJoins
  *  3. a SECOND, reduced-point run of the same study pair ("scaling_small",
  *     VERDICT.md r04 #4) corroborating the gate in windows where the full
  *     study can't finish cleanly.
- *  4. the (cpus/8, cpus/2) bus-ceiling exhibit ("scaling_alt"), context
- *     only, when budget remains.
  *
  * EVERYTHING runs under one global wall clock (SPARK_GRAFT_TOTAL_BUDGET_S,
  * default 2040 s): the r03 and r04 driver-side bench runs were both KILLED
@@ -201,8 +199,7 @@ object Bench {
       r
     }
     val pip = phase("pip")(SpatialJoins.pipJoin(pts, polys).count())
-    val knn = phase("knn")(SpatialJoins.knnJoin(queries, pts, k = 5,
-      queryCountHint = Some(nQueries)).count())
+    val knn = phase("knn")(SpatialJoins.knnJoin(queries, pts, k = 5).count())
     val hist = phase("hist")(SpatialJoins.tileHistogram(pts, z = 6)
       .agg(sum("cnt")).collect()(0).getLong(0))
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
@@ -456,7 +453,7 @@ object Bench {
         java.nio.file.Paths.get(path), s + "\n")
       catch { case e: Throwable => System.err.println(s"[bench] write $path failed: $e") }
     // the scaling fragment embedded in every (partial) summary write; reset
-    // as the study / small pair / alt exhibit complete
+    // as the study and the small pair complete
     var scalingStr = ""
     def compactJson(): String = {
       val picked = resultsBuf.toSeq.map { case (n, as) => n -> best(as) }
@@ -469,15 +466,14 @@ object Bench {
         .mkString("{", ",", "}")
       // pull the gate numbers back out of the scaling fragment rather than
       // re-deriving them (the fragment is the single source of truth).
-      // SCOPED to the main "scaling" object: the scaling_small/scaling_alt
-      // fragments appended after it carry their own "efficiency" keys, and
+      // SCOPED to the main "scaling" object: the scaling_small fragment
+      // appended after it carries its own "efficiency" key, and
       // an incomplete main study (no efficiency emitted) must read null in
-      // the gate columns, not silently borrow an exhibit's number (review
-      // finding)
+      // the gate columns, not silently borrow the small pair's number
+      // (review finding)
       val mainScaling = {
-        val cut = Seq(""","scaling_small":""", ""","scaling_alt":""")
-          .map(scalingStr.indexOf).filter(_ >= 0)
-        if (cut.isEmpty) scalingStr else scalingStr.substring(0, cut.min)
+        val cut = scalingStr.indexOf(""","scaling_small":""")
+        if (cut < 0) scalingStr else scalingStr.substring(0, cut)
       }
       def grab(key: String): String =
         s""""$key":(-?[0-9.]+)""".r.findFirstMatchIn(mainScaling)
@@ -502,7 +498,6 @@ object Bench {
     // ---- stage 1: scaling study (same job, same input, lo vs hi
     // parallelism, each measured in its own fresh JVM; see child mode above)
     var runSmallPair: () => Unit = () => ()
-    var runAltExhibit: () => Unit = () => ()
     var renderScaling: () => String = () => ""
     if (doScaling) {
       // This sandbox VM shares a host: /proc/stat shows steal bursts taking
@@ -553,9 +548,8 @@ object Bench {
         def thr: Double = rows / sec
       }
       val attempts = scala.collection.mutable.ArrayBuffer.empty[Attempt]
-      // stage-3 / stage-4 exhibits fill these fragments after the study
+      // the stage-3 pair fills this fragment after the study
       var smallJson = ""
-      var altJson = ""
       def attemptAt(buf: scala.collection.mutable.ArrayBuffer[Attempt],
                     cpus: Int, points: Long, tag: String): Attempt = {
         val (st0, tot0) = cpuStat()
@@ -666,7 +660,7 @@ object Bench {
         val hLo = chosen.map(_._1).getOrElse(bestLo)
         val hHi = chosen.map(_._2).getOrElse(bestHi)
         val hostJson = f""""host":{"dram_lo":${hLo.dram}%.1f,"dram_hi":${hHi.dram}%.1f,"flops_lo":${hLo.flops}%.1f,"flops_hi":${hHi.flops}%.1f}"""
-        f""","scaling":{"points":$scalePoints,"cpus_lo":$cpusLo,"cpus_hi":$cpusHi,"sec_lo":$secLo%.3f,"sec_hi":$secHi%.3f,"rows_per_sec_lo":$thrLo%.1f,"rows_per_sec_hi":$thrHi%.1f,"efficiency":$eff%.3f,"efficiency_median":$effMed%.3f,"efficiency_hostrel":$effHostRel%.3f,"efficiency_bestattempt":$effAttempt%.3f,"efficiency_median_bestattempt":$effMedAttempt%.3f,"rounds_paired":$roundsJson,"partial":$partial,"steal_max":$stealMax,"rounds":$rounds,"rounds_executed":${rounds0.size},"window_slow":$windowSlow%.2f,$hostJson,"attempts":$attemptsJson}$smallJson$altJson"""
+        f""","scaling":{"points":$scalePoints,"cpus_lo":$cpusLo,"cpus_hi":$cpusHi,"sec_lo":$secLo%.3f,"sec_hi":$secHi%.3f,"rows_per_sec_lo":$thrLo%.1f,"rows_per_sec_hi":$thrHi%.1f,"efficiency":$eff%.3f,"efficiency_median":$effMed%.3f,"efficiency_hostrel":$effHostRel%.3f,"efficiency_bestattempt":$effAttempt%.3f,"efficiency_median_bestattempt":$effMedAttempt%.3f,"rounds_paired":$roundsJson,"partial":$partial,"steal_max":$stealMax,"rounds":$rounds,"rounds_executed":${rounds0.size},"window_slow":$windowSlow%.2f,$hostJson,"attempts":$attemptsJson}$smallJson"""
       }
       // persist progress after every attempt once both levels have data —
       // a timeout/kill mid-study must not zero the round's scaling evidence
@@ -796,57 +790,6 @@ object Bench {
         }
       }
 
-      // ---- stage 4 (last): the bus-limited (cpus/8, cpus/2) pair recorded
-      // IN the JSON with its own host probes, so a reader sees the
-      // DRAM-bus-ceiling story (why the gate pair is (2,8)) from the
-      // evidence itself rather than BASELINE.md prose. Strictly
-      // leftover-budget: 2 attempts per level only while the global clock
-      // allows, starting only if the first (lo,hi) round fits. An EXHIBIT,
-      // not the gate metric — separate "scaling_alt" key, never feeds
-      // "efficiency".
-      val doAlt = sys.env.getOrElse("SPARK_GRAFT_SCALING_ALT", "1") != "0"
-      runAltExhibit = () => if (doAlt) {
-        try {
-          val (altLo, altHi) = sys.env.get("SPARK_GRAFT_SCALING_CPUS_ALT") match {
-            case Some(s) => val Array(l, h) = s.split(","); (l.trim.toInt, h.trim.toInt)
-            case None => (math.max(1, cpus / 8), math.max(2, cpus / 2))
-          }
-          val altPoints =
-            sys.env.get("SPARK_GRAFT_SCALE_POINTS_ALT").map(_.toLong)
-              .getOrElse(smallPoints)
-          val firstRoundCost =
-            altPoints * (perPointLo / 2 + perPointHi) * windowSlow + 2 * fixedAttemptS
-          if (gRemaining < firstRoundCost) {
-            System.err.println(f"[bench] skipping alt exhibit " +
-              f"(remaining=${gRemaining}%.0fs < ${firstRoundCost}%.0fs)")
-          } else {
-            val alt = scala.collection.mutable.ArrayBuffer.empty[Attempt]
-            def go(c: Int): Unit =
-              try { attemptAt(alt, c, altPoints, "scaling_alt") }
-              catch { case e: Throwable =>
-                System.err.println(s"[bench] alt attempt (cpus=$c) failed: $e") }
-            Seq(altLo, altHi).foreach(go)
-            Seq(altHi, altLo).foreach(c => if (gRemaining > firstRoundCost / 2) go(c))
-            def bestOf(c: Int): Option[Attempt] = {
-              val mine = alt.filter(_.cpus == c).toSeq
-              val clean = mine.filter(_.clean)
-              (if (clean.nonEmpty) clean else mine).sortBy(_.sec).headOption
-            }
-            (bestOf(altLo), bestOf(altHi)) match {
-              case (Some(bl), Some(bh)) =>
-                val effA = (bh.thr / bl.thr) / (altHi.toDouble / altLo)
-                val attemptsJ = alt.map(a =>
-                  f"""{"cpus":${a.cpus},"sec":${a.sec}%.3f,"steal":${a.steal}%.4f,"clean":${a.clean},"dram":${a.dram}%.1f,"flops":${a.flops}%.1f}""")
-                  .mkString("[", ",", "]")
-                altJson =
-                  f""","scaling_alt":{"points":$altPoints,"cpus_lo":$altLo,"cpus_hi":$altHi,"sec_lo":${bl.sec}%.3f,"sec_hi":${bh.sec}%.3f,"rows_per_sec_lo":${bl.thr}%.1f,"rows_per_sec_hi":${bh.thr}%.1f,"efficiency":$effA%.3f,"host":{"dram_lo":${bl.dram}%.1f,"dram_hi":${bh.dram}%.1f,"flops_lo":${bl.flops}%.1f,"flops_hi":${bh.flops}%.1f},"attempts":$attemptsJ,"note":"bus-ceiling exhibit at (cpus/8,cpus/2): the shared-DRAM host caps scan-shaped scaling at this pair; the gate metric is the uncontended (cpus/16,cpus/4) pair above"}"""
-              case _ => ()
-            }
-          }
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench] scaling_alt failed (non-fatal): $e")
-        }
-      }
       // a study where one level never completed an attempt (every child of
       // that level crashed) must not throw out of main — the suite still
       // runs and whatever attempts exist ship as evidence (review finding:
@@ -860,7 +803,7 @@ object Bench {
           val attemptsJson = attempts.map(a =>
             f"""{"cpus":${a.cpus},"sec":${a.sec}%.3f,"steal":${a.steal}%.4f,"clean":${a.clean},"dram":${a.dram}%.1f,"flops":${a.flops}%.1f}""")
             .mkString("[", ",", "]")
-          s""","scaling":{"points":$scalePoints,"cpus_lo":$cpusLo,"cpus_hi":$cpusHi,"incomplete":true,"partial":true,"attempts":$attemptsJson}$smallJson$altJson"""
+          s""","scaling":{"points":$scalePoints,"cpus_lo":$cpusLo,"cpus_hi":$cpusHi,"incomplete":true,"partial":true,"attempts":$attemptsJson}$smallJson"""
         }
     }
 
@@ -926,14 +869,9 @@ object Bench {
     }
     if (doSuite) runSuite()
     writeSummary()
-    // stages 3 + 4: reduced-point corroboration pair, then the bus-ceiling
-    // exhibit on whatever budget remains; re-render after each so the
-    // fragments land in both files even if the process dies before the
-    // final println
+    // stage 3: reduced-point corroboration pair; re-render so the fragment
+    // lands in both files even if the process dies before the final println
     runSmallPair()
-    scalingStr = renderScaling()
-    writeSummary()
-    runAltExhibit()
     scalingStr = renderScaling()
     writeSummary()
     println(suiteJson(resultsBuf.toSeq, scalingStr))

@@ -49,14 +49,9 @@ object SparkEntry {
   /** Housekeeping for the pid-keyed scratch dirs (ADVICE.md r04): without
    * it every JVM run leaks one small dir per (sf dir, stream source) into
    * java.io.tmpdir. Two belts: a shutdown hook deletes THIS pid's dirs, and
-   * before each write we prune `graft_*_p<pid>` dirs whose owning pid is no
-   * longer alive (covers kill -9'd bench children whose hooks never ran).
-   * Registered lazily once per JVM. */
+   * once per JVM, on first use, we prune the dirs of dead pids
+   * (covers kill -9'd bench children whose hooks never ran). */
   private lazy val streamScratchHousekeeping: Unit = {
-    def rmTree(p: java.io.File): Unit = {
-      if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rmTree))
-      p.delete(); ()
-    }
     val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
     val myPid = ProcessHandle.current().pid()
     Runtime.getRuntime.addShutdownHook(new Thread(() =>
@@ -64,10 +59,29 @@ object SparkEntry {
         if (f.getName.startsWith("graft_") && f.getName.endsWith("_p" + myPid))
           rmTree(f)
       })))
+    pruneDeadScratch(tmp, myPid, System.currentTimeMillis())
+  }
+
+  private def rmTree(p: java.io.File): Unit = {
+    if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rmTree))
+    p.delete(); ()
+  }
+
+  /** A scratch dir is only pruned once it is this old (mtime): its owner
+   * may be alive in another PID namespace sharing the tmpdir, where its pid
+   * looks dead to this JVM, and it writes the dir at startup. */
+  private[graft] val scratchPruneMinAgeMs: Long = 10 * 60 * 1000L
+
+  /** Deletes the `graft_*_p<pid>` dirs under `tmpDir` whose pid is not
+   * `myPid`, is not alive, and whose mtime is at least
+   * [[scratchPruneMinAgeMs]] before `nowMs`. */
+  private[graft] def pruneDeadScratch(tmpDir: java.io.File, myPid: Long,
+                                      nowMs: Long): Unit = {
     val deadPid = "^graft_.*_p(\\d+)$".r
-    Option(tmp.listFiles()).foreach(_.foreach { f =>
+    Option(tmpDir.listFiles()).foreach(_.foreach { f =>
       f.getName match {
         case deadPid(pid) if pid.toLong != myPid &&
+          nowMs - f.lastModified() >= scratchPruneMinAgeMs &&
           !ProcessHandle.of(pid.toLong).map[Boolean](_.isAlive).orElse(false) =>
           rmTree(f)
         case _ => ()

@@ -112,27 +112,17 @@ object SpatialJoins {
    * @param targets (pid, lon, lat)
    * @return (qid, pid, dist, rank) with rank in [1, k]
    */
-  /**
-   * @param queryCountHint the EXACT row count of `queries`, when the caller
-   *        knows it statically (a generated query set) — saves one count()
-   *        job of pure fixed driver latency. CORRECTNESS-load-bearing, not
-   *        advisory: it decides whether the brute backstop for queries with
-   *        fewer than k in-ring candidates runs at all, so an UNDER-count
-   *        silently drops those queries from the result (review finding).
-   *        Pass None (default) unless the count is exact.
-   */
   def knnJoin(queries: DataFrame, targets: DataFrame, k: Int,
               levels: Seq[Int] = Seq(20, 18, 16, 14, 12, 10, 8, 6),
               ringK: Int = 2, proofFactor: Int = 32,
-              broadcastQueries: Boolean = true,
-              queryCountHint: Option[Long] = None): DataFrame = {
+              broadcastQueries: Boolean = true): DataFrame = {
     require(ringK >= 1 && levels.nonEmpty && levels == levels.sorted.reverse &&
       levels.distinct == levels,
       "levels must be distinct, finest (largest) first")
     val (targetsD, levelCounts, _) =
       prepareKnnTargets(targets, k, levels, ringK, proofFactor)
     knnCore(queries, targetsD, levelCounts, k, levels, ringK, proofFactor,
-      broadcastQueries, queryCountHint)
+      broadcastQueries)
   }
 
   /**
@@ -157,14 +147,6 @@ object SpatialJoins {
     knnCore(queries, index.targetsD, index.levelCounts, k, index.levels,
       index.ringK, proofFactor, broadcastQueries)
   }
-
-  // dev-only phase timing (GRAFT_KNN_DEBUG=1): prints at each eager step
-  private def dbg = sys.env.get("GRAFT_KNN_DEBUG").contains("1")
-  private def tt[T](name: String)(f: => T): T =
-    if (!dbg) f else {
-      val t0 = System.nanoTime(); val r = f
-      System.err.println(f"[knn] $name%-18s ${(System.nanoTime() - t0) / 1e9}%8.2f s"); r
-    }
 
   /**
    * Target-side preparation for kNN (steps 0+1 of [[knnJoin]]'s plan):
@@ -249,11 +231,11 @@ object SpatialJoins {
       .agg(count(lit(1)).as("cnt"))
     val (nTargets, maxStackPre, fineCellsPre): (Long, Option[Long], Option[DataFrame]) =
       if (estRows <= 4000000L) {
-        val fc = tt("fine cells ckpt")(fineCells(targets).localCheckpoint())
+        val fc = fineCells(targets).localCheckpoint()
         val r = fc.agg(sum(col("cnt")), max(col("cnt"))).first()
         (if (r.isNullAt(0)) 0L else r.getLong(0),
           Some(if (r.isNullAt(1)) 0L else r.getLong(1)), Some(fc))
-      } else (tt("count")(targets.count()), None, None)
+      } else (targets.count(), None, None)
     val lc = math.min(levels.max, math.max(levels.min,
       (math.log(math.max(1024.0, nTargets / 6.0)) / math.log(4.0)).toInt))
     // Small corpora take the direct plan (one full-ladder rollup from the
@@ -308,12 +290,12 @@ object SpatialJoins {
       // — the same order as the design's pf*k*16 candidate budget — so the
       // dedup could not reduce cost materially. One cheap stats job decides;
       // deep-stack corpora still take the dedup path unchanged.
-      val maxStack = maxStackPre.getOrElse(tt("stack stats") {
+      val maxStack = maxStackPre.getOrElse {
         val r = fineCells(targets).agg(max(col("cnt"))).first()
         if (r.isNullAt(0)) 0L else r.getLong(0)
-      })
+      }
       val (tD, base) = if (maxStack > proofFactor.toLong * k) {
-        val d = tt("global dedup")(stackDedup(targets).localCheckpoint())
+        val d = stackDedup(targets).localCheckpoint()
         (d, fineCells(d))
       } else (targets, fineCellsPre.getOrElse(fineCells(targets)))
       val lcs = base
@@ -342,10 +324,10 @@ object SpatialJoins {
       val sampled = if (sampleF >= 1.0) targets
         else targets.filter(pmod(xxhash64(col("pid")), lit(1000000)) <
           lit(math.max(1L, (sampleF * 1000000).toLong)))
-      val coarseCounts = tt("coarse agg")(sampled
+      val coarseCounts = sampled
         .groupBy(cell_encode(col("lon"), col("lat"), lit(lc)).as("ccell"))
         .agg(count(lit(1)).as("cnt"))
-        .localCheckpoint())
+        .localCheckpoint()
       // Hot-set bound: the prune-exact criterion (see the derivation above
       // fineLevels) is ABSOLUTE — on a corpus dense enough that mean
       // occupancy approaches it, every cell qualifies and refinement
@@ -357,7 +339,7 @@ object SpatialJoins {
       // threshold above the exact criterion can only UNDER-assign
       // borderline rings — they fall to a coarser level and pay more
       // candidates; exactness is untouched.
-      val p995 = tt("p995") {
+      val p995 = {
         val r = coarseCounts.agg(expr("approx_percentile(cnt, 0.995)")).first()
         if (r.isNullAt(0)) 0L else r.getLong(0) // empty sample -> no hot set
       }
@@ -371,10 +353,9 @@ object SpatialJoins {
       val refinable = coarseCounts.filter(col("cnt") >= refineThresh).select("ccell")
       val withC = targets.withColumn("ccell",
         cell_encode(col("lon"), col("lat"), lit(lc)))
-      val hotD = tt("hotD")(stackDedup(
-          withC.join(broadcast(refinable), Seq("ccell"), "left_semi")
-            .drop("ccell"))
-        .localCheckpoint())
+      val hotD = stackDedup(
+        withC.join(broadcast(refinable), Seq("ccell"), "left_semi").drop("ccell"))
+        .localCheckpoint()
       // cold side stays LAZY: a rescan + broadcast anti-join per consumer
       // costs no shuffle, vs materializing |targets| rows
       val cold = withC.join(broadcast(refinable), Seq("ccell"), "left_anti")
@@ -402,8 +383,7 @@ object SpatialJoins {
    */
   private def knnCore(queries: DataFrame, targetsD: DataFrame,
       levelCounts: DataFrame, k: Int, levels: Seq[Int], ringK: Int,
-      proofFactor: Int, broadcastQueries: Boolean,
-      queryCountHint: Option[Long] = None): DataFrame = {
+      proofFactor: Int, broadcastQueries: Boolean): DataFrame = {
     val w = Window.partitionBy(col("qid")).orderBy(col("dist"), col("pid"))
     val out = Seq("qid", "pid", "dist", "rank")
     val res = shiftrightunsigned(col("cell"), 56).cast("int")
@@ -427,10 +407,10 @@ object SpatialJoins {
     // checkpoint's RDD already executes every non-result query stage at
     // plan-construction time (AdaptiveSparkPlanExec.getFinalPhysicalPlan),
     // so laziness saves no work and serializes the stages in a worse order.
-    val assigned = tt("assigned ckpt")(ringPop.groupBy("qid")
+    val assigned = ringPop.groupBy("qid")
       .agg(max(when(col("pop") >= proofFactor.toLong * k, col("res"))).as("lvl"))
       .select(col("qid"), coalesce(col("lvl"), lit(levels.min)).as("lvl"))
-      .localCheckpoint()) // one row per query; reused by usedLevels + probes
+      .localCheckpoint() // one row per query; reused by usedLevels + probes
     val probes = queries.join(assigned, Seq("qid"), "left_outer")
       .withColumn("lvl", coalesce(col("lvl"), lit(levels.min))) // empty-ring queries
       .withColumn("cell", explode(cell_kring(
@@ -455,11 +435,11 @@ object SpatialJoins {
       .withColumn("cell", cell_encode(col("lon"), col("lat"), col("lvl")))
       .drop("lvl")
     val probeSide = if (broadcastQueries) broadcast(probes) else probes
-    val ranked = tt("ranked ckpt")(probeSide.join(targetCells, "cell")
+    val ranked = probeSide.join(targetCells, "cell")
       .withColumn("dist", planar_dist(col("qlon"), col("qlat"), col("lon"), col("lat")))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
-      .localCheckpoint()) // <= |queries| * k rows; cuts recompute + lineage
+      .localCheckpoint() // <= |queries| * k rows; cuts recompute + lineage
 
     // 5. per-level guaranteed radius; proof — checkpointed (one row per
     // query) so the three consumers below and the driver-side branch
@@ -469,10 +449,10 @@ object SpatialJoins {
     val radius = levels.foldLeft(lit(0.0)) { (acc, l) =>
       when(col("lvl") === l, guaranteed(l)).otherwise(acc)
     }
-    val proof = tt("proof ckpt")(ranked.groupBy("qid")
+    val proof = ranked.groupBy("qid")
       .agg(count(lit(1)).as("n"), max("dist").as("kth"), first("lvl").as("lvl"))
       .withColumn("complete", col("n") === k && col("kth") < radius)
-      .localCheckpoint())
+      .localCheckpoint()
     val provenQids = proof.filter(col("complete")).select("qid")
     val provenSide = if (broadcastQueries) provenQids.hint("broadcast") else provenQids
     val proven = ranked.join(provenSide, Seq("qid"), "left_semi")
@@ -482,25 +462,19 @@ object SpatialJoins {
     // option the same way, src/osm/Osm2ttl.cpp:115-121): in the common
     // all-proven case the round-2 and brute branches would still each SCAN
     // the full corpus — empty-broadcast elimination is not guaranteed
-    // pre-AQE — so spend three sub-second aggregates over the per-query
-    // proof table to cut whole corpus passes.
-    // the hint shaves one full action (a job round-trip that no parallelism
-    // shrinks — it is pure fixed cost, the Amdahl term that caps what a
-    // reduced-point scaling study can read); callers that generate their
-    // query set (the Bench scaling job) know the count statically
-    val nQueriesTotal = queryCountHint.getOrElse(queries.count())
-    // one aggregate job for both branch-pruning counts (each Spark action
-    // costs fixed scheduling latency that no cores shrink)
-    val (nProven, nNeeds) = tt("proof counts") {
-      val r = proof.agg(
-        sum(when(col("complete"), 1L).otherwise(0L)),
-        sum(when(!col("complete") && col("n") === k, 1L).otherwise(0L))).first()
+    // pre-AQE — so spend one sub-second aggregate to cut whole corpus
+    // passes (each Spark action costs fixed scheduling latency that no
+    // cores shrink). It runs over every query, not just the proof table: a
+    // query with no candidate at all has no proof row and must still reach
+    // the brute backstop.
+    val (nNeeds, nRemaining) = {
+      val proofSide = if (broadcastQueries) broadcast(proof) else proof
+      val r = queries.select("qid").join(proofSide, Seq("qid"), "left_outer").agg(
+        sum(when(!col("complete") && col("n") === k, 1L).otherwise(0L)),
+        sum(when(coalesce(col("n"), lit(0L)) < k, 1L).otherwise(0L))).first()
       (if (r.isNullAt(0)) 0L else r.getLong(0),
        if (r.isNullAt(1)) 0L else r.getLong(1))
     }
-    val nRemaining = nQueriesTotal - nProven - nNeeds
-    if (dbg) System.err.println(
-      s"[knn] queries=$nQueriesTotal proven=$nProven round2=$nNeeds brute=$nRemaining")
     def emptyResult = ranked.filter(lit(false)).select(out.head, out.tail: _*)
 
     // 6. round 2 for unproven queries that DID find k candidates: round 1's
@@ -522,7 +496,7 @@ object SpatialJoins {
     // throws "key not found: <attr>" when a union child's constraint set
     // reaches through the hot-union-cold targets plan — checkpointed leaves
     // carry no constraints, making the final 3-way union rewrite-safe.
-    val round2 = if (nNeeds == 0) emptyResult else tt("round2 ckpt") {
+    val round2 = if (nNeeds == 0) emptyResult else {
       val probes2 = queries.join(needs, "qid")
         .withColumn("cell", explode(cell_kring(
           cell_encode(col("qlon"), col("qlat"), col("lvl")), lit(ringK))))
@@ -540,7 +514,7 @@ object SpatialJoins {
 
     // 7. brute backstop only for pathological queries (< k candidates found,
     // e.g. k > |targets| in range, or no candidates at any level)
-    val brute = if (nRemaining == 0) emptyResult else tt("brute ckpt") {
+    val brute = if (nRemaining == 0) emptyResult else {
       val handled = provenQids.unionByName(needs.select("qid"))
       val remaining = queries.join(handled, Seq("qid"), "left_anti")
       val remSide = if (broadcastQueries) broadcast(remaining) else remaining

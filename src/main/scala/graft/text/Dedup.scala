@@ -169,12 +169,9 @@ object Dedup {
       docSh, threshold)
   }
 
-  // The PPJoin stages are package-visible so graft.ProfileMain times the
-  // REGISTERED pipeline stage by stage instead of a copy that could drift.
-
   /** hashed-shingle corpus projection (doc_id, sh: array<long>, n),
    * checkpointed once — feeds both the inverted index and the verify. */
-  private[graft] def docShingleHashes(docs: DataFrame): DataFrame =
+  private def docShingleHashes(docs: DataFrame): DataFrame =
     spread(docs)
       .select(col("doc_id"), tokens(col("text")).as("toks"))
       .select(col("doc_id"),
@@ -184,7 +181,7 @@ object Dedup {
   /** per-doc PPJoin prefix rows (doc_id, n, p, shingle): shingles ranked by
    * ascending document frequency (ties by hash for determinism), first
    * n - ceil(t*n) + 1 kept, p = 1-based rank in the global order. */
-  private[graft] def ppjoinPrefixes(docSh: DataFrame, threshold: Double): DataFrame = {
+  private def ppjoinPrefixes(docSh: DataFrame, threshold: Double): DataFrame = {
     val idx = docSh.select(col("doc_id"), explode(col("sh")).as("shingle"))
     val freq = idx.groupBy("shingle").agg(count(lit(1)).as("df"))
     idx.join(freq, "shingle")
@@ -200,7 +197,7 @@ object Dedup {
 
   /** distinct candidate pairs from the prefix self-join, with PPJoin's
    * length and positional filters. */
-  private[graft] def ppjoinCandidates(prefixes: DataFrame, threshold: Double): DataFrame =
+  private def ppjoinCandidates(prefixes: DataFrame, threshold: Double): DataFrame =
     prefixes.as("a").join(prefixes.as("b"),
         col("a.shingle") === col("b.shingle") && col("a.doc_id") < col("b.doc_id") &&
           greatest(col("a.n"), col("b.n")) * threshold <=
@@ -221,8 +218,8 @@ object Dedup {
   /** exact verify straight off the checkpointed shingle-hash arrays — no
    * second corpus tokenization (the arrays are already materialized behind
    * a LogicalRDD, so no further barrier is required). */
-  private[graft] def ppjoinVerify(candidates: DataFrame, docSh: DataFrame,
-                                  threshold: Double): DataFrame =
+  private def ppjoinVerify(candidates: DataFrame, docSh: DataFrame,
+                           threshold: Double): DataFrame =
     candidates
       .join(docSh.select(col("doc_id").as("doc_a"), col("sh").as("sha"), col("n").as("na")), "doc_a")
       .join(docSh.select(col("doc_id").as("doc_b"), col("sh").as("shb"), col("n").as("nb")), "doc_b")

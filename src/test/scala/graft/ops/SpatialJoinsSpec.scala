@@ -31,19 +31,24 @@ class SpatialJoinsSpec extends AnyFunSuite {
   }
 
   test("knnJoin is exact vs Scala brute force (incl. residual fallback)") {
-    val targets = (0 until 300).map { i =>
+    val spread = (0 until 300).map { i =>
       (i.toLong, (i * 31 % 360) - 180.0 + i * 1e-4, (i * 57 % 170) - 85.0 + i * 1e-4)
     }
+    // k above the target count, and no query has a target in its rings:
+    // every query has no proof row and must still reach the brute backstop
+    val few = Seq((0L, 100.0, -30.0), (1L, 100.5, -30.5), (2L, 101.0, -29.0))
     val queries = Seq((1L, 0.5, 0.5), (2L, -179.9, -84.9), (3L, 10.0, 40.0))
-    val got = SpatialJoins.knnJoin(queries.toDF("qid", "qlon", "qlat"),
-        targets.toDF("pid", "lon", "lat"), k = 4)
-      .select("qid", "pid", "rank").as[(Long, Long, Long)].collect()
-      .groupBy(_._1).view.mapValues(_.sortBy(_._3).map(_._2).toSeq).toMap
-    queries.foreach { case (qid, qlon, qlat) =>
-      val want = targets.sortBy { case (pid, lon, lat) =>
-        (math.sqrt((lon - qlon) * (lon - qlon) + (lat - qlat) * (lat - qlat)), pid)
-      }.take(4).map(_._1)
-      assert(got(qid) === want, s"qid=$qid")
+    Seq((spread, 4), (few, 5)).foreach { case (targets, k) =>
+      val got = SpatialJoins.knnJoin(queries.toDF("qid", "qlon", "qlat"),
+          targets.toDF("pid", "lon", "lat"), k = k)
+        .select("qid", "pid", "rank").as[(Long, Long, Long)].collect()
+        .groupBy(_._1).view.mapValues(_.sortBy(_._3).map(_._2).toSeq).toMap
+      queries.foreach { case (qid, qlon, qlat) =>
+        val want = targets.sortBy { case (pid, lon, lat) =>
+          (math.sqrt((lon - qlon) * (lon - qlon) + (lat - qlat) * (lat - qlat)), pid)
+        }.take(k).map(_._1)
+        assert(got(qid) === want, s"k=$k qid=$qid")
+      }
     }
   }
 
