@@ -61,31 +61,39 @@ class SnapshotStore(val root: String) {
     max
   }
 
-  /** Range-partition by cell and write one table + its lineage rows.
-   *
-   * The partitioned frame is materialized ONCE (localCheckpoint) before
-   * the write and the lineage aggregation read it: a second execution
-   * would re-sample RangePartitioner bounds (seeded per RDD), so the
-   * lineage could describe partition ranges that differ from the files
-   * actually written — and the whole upstream plan would run twice
-   * (review finding). Lineage lands under lineage/stage=<table> with
-   * OVERWRITE, so a crash-resume re-run of an uncommitted seq replaces
-   * its own stage's rows instead of appending stale duplicates next to
-   * them (review finding); readers see `stage` as a partition column. */
+  /** Range-partition by cell and write one table + its lineage rows. */
   def writeTable(df: DataFrame, seq: Long, table: String, cellCol: String,
-                 partitions: Int): Unit = {
-    val dir = s"${seqDir(seq)}/$table"
-    val parted = df.repartitionByRange(partitions, col(cellCol)).localCheckpoint()
-    parted.write.mode("overwrite").parquet(dir)
-    val lineage = parted
+                 partitions: Int): Unit =
+    writeRanged(rangePartition(df, cellCol, partitions), seq, table, cellCol)
+
+  /** Range-partition by `cellCol`, materialized ONCE: a second execution
+   * would re-sample RangePartitioner bounds (seeded per RDD), so the
+   * lineage could describe ranges other than the files written, and the
+   * upstream plan would run twice (review finding). */
+  private[graft] def rangePartition(df: DataFrame, cellCol: String, partitions: Int): DataFrame =
+    df.repartitionByRange(partitions, col(cellCol)).localCheckpoint()
+
+  /** Write a [[rangePartition]]ed frame and its per-partition lineage rows,
+   * collected once and written from the driver; returns their row sum.
+   * Lineage lands under lineage/stage=<table> with OVERWRITE, so a resumed
+   * re-run of an uncommitted seq replaces its own stage's rows instead of
+   * appending duplicates (review finding); readers see `stage` as a
+   * partition column. */
+  private[graft] def writeRanged(parted: DataFrame, seq: Long, table: String,
+                                 cellCol: String): Long = {
+    parted.write.mode("overwrite").parquet(s"${seqDir(seq)}/$table")
+    val ranges = parted
       .groupBy(spark_partition_id().as("partition_id"))
       .agg(
         min(col(cellCol)).as("cell_lo"),
         max(col(cellCol)).as("cell_hi"),
         count(lit(1)).as("row_count"))
       .withColumn("applied_seq", lit(seq))
-    lineage.write.mode("overwrite")
+    val rows = ranges.collect()
+    parted.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), ranges.schema)
+      .coalesce(1).write.mode("overwrite")
       .parquet(s"${seqDir(seq)}/lineage/stage=$table")
+    rows.map(_.getAs[Long]("row_count")).sum
   }
 
   /** A6: per-sequence statistics rows (kind, name, value, applied_seq) from
@@ -151,25 +159,35 @@ object UpdateJob {
   }
 
   /**
-   * Apply ONE change sequence on top of `snapshot` and COMMIT it — the
+   * Apply ONE change sequence on top of `snapshot0` and COMMIT it — the
    * shared per-seq body of the batch [[run]] and the streaming
-   * [[graft.streaming.ChangeStream.ingest]]. One code path is what makes
-   * "streaming and batch semantics cannot drift" TRUE rather than an
-   * aspiration: ingest previously re-implemented this loop without the
-   * dirty-way rebuild, run statistics, or the Observation-riding row count
-   * (review finding).
+   * [[graft.streaming.ChangeStream.ingest]], so streaming and batch
+   * semantics cannot drift.
+   *
+   * Each per-seq intermediate is computed once, as a localCheckpoint that
+   * every later consumer reads: `classify` materializes the compacted batch
+   * (batch counters, closure, MERGE expectations, merge); `closure` the
+   * dirty way ids (way rebuild); `merge` the post-merge snapshot with its
+   * `cell`, range-partitioned (the node_geoms write, its lineage — whose
+   * row sum the MERGE cross-check tests before the commit — the way
+   * rebuild's member coordinates, and the next seq's `snapshot0`). Stats
+   * are written after the `write` phase closes, so they include it.
    *
    * @param compacted  classified + last-writer-wins-compacted rows of `seq`
-   * @param beforeRows row count of `snapshot` (carried across seqs so no
-   *                   per-seq full recount is paid)
-   * @return (post-merge checkpointed snapshot, its row count)
+   * @param beforeRows row count of `snapshot0`: the previous seq's
+   *                   lineage row sum, or the initial snapshot's count
+   * @return (post-merge checkpointed snapshot, its lineage row sum)
    */
   private[graft] def applySeq(spark: SparkSession, store: SnapshotStore,
       stats: RunStatistics, seq: Long, compacted: DataFrame,
       snapshot0: DataFrame, wayMembers: DataFrame, beforeRows: Long,
       cellRes: Int, partitions: Int): (DataFrame, Long) = {
-    stats.time("classify")(stats.countBatch(compacted))
-    val nodeBatch = compacted.filter(col("obj_type") === "node")
+    val batch = stats.time("classify") {
+      val b = compacted.localCheckpoint()
+      stats.countBatch(b)
+      b
+    }
+    val nodeBatch = batch.filter(col("obj_type") === "node")
       .select(col("id"), col("action"), col("lon"), col("lat"))
 
     // dependency closure against the PRE-merge snapshot: locationDiff
@@ -178,49 +196,31 @@ object UpdateJob {
     // ways of moved nodes would never be rebuilt (the reference fetches
     // referencing ways before applying the batch,
     // src/osm/OsmChangeHandler.cpp:96-117)
-    val (dirtyWays, _) = stats.time("closure")(ChangeBatch.dependencyClosure(
-      compacted, snapshot0, wayMembers, emptyRelMembers(spark)))
+    val dirtyWays = stats.time("closure")(ChangeBatch.dependencyClosure(
+      batch, snapshot0, wayMembers, emptyRelMembers(spark))._1.localCheckpoint())
 
     // expected MERGE effect — the reference's QLever-reported
     // insert/delete counts, computed store-side here
     val (expDeleted, expUpserted) =
       stats.time("merge_expect")(DeltaApply.mergeMetrics(snapshot0, nodeBatch))
-    // actual row count rides a CollectMetrics observation on the
-    // checkpoint action (no extra job); count() only as fallback
-    val obs = org.apache.spark.sql.Observation(s"merge-$seq")
-    val snapshot = stats.time("merge")(
-      DeltaApply.applyChangeBatch(snapshot0, nodeBatch)
-        .select("id", "lon", "lat")
-        .observe(obs, count(lit(1)).as("rows"))
-        .localCheckpoint(true)) // cut lineage: each seq builds on materialized state
-    val afterRows = try {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration._
-      import scala.concurrent.ExecutionContext.Implicits.global
-      // Observation.get blocks until a Dataset action reports metrics;
-      // guard with a timeout in case the checkpoint materialization
-      // bypasses the listener, and fall back to a (cheap) count of the
-      // checkpointed snapshot.
-      Await.result(Future(obs.get), 10.seconds)
-        .get("rows").map(_.asInstanceOf[Long]).getOrElse(snapshot.count())
-    } catch { case _: java.util.concurrent.TimeoutException => snapshot.count() }
-    stats.crossCheckMerge(seq, beforeRows, afterRows, expDeleted, expUpserted)
+    val merged = stats.time("merge")(store.rangePartition(
+      DeltaApply.applyChangeBatch(snapshot0, nodeBatch).select("id", "lon", "lat")
+        .withColumn("cell", cell_encode(col("lon"), col("lat"), lit(cellRes))),
+      "cell", partitions))
 
-    // dirty-geometry recompute, scoped to affected ways only; member
-    // coords come from the POST-merge snapshot (new locations)
-    val dirtyMembers = wayMembers.join(dirtyWays.hint("broadcast"), Seq("way_id"), "left_semi")
-    val rebuiltGeoms = GeometryBuild.buildWayGeoms(dirtyMembers, snapshot, withDerived = false)
-      .withColumn("cell", cell_encode(st_x(col("wkt")), st_y(col("wkt")), lit(cellRes)))
-
-    val snapCells = snapshot.withColumn("cell",
-      cell_encode(col("lon"), col("lat"), lit(cellRes)))
-    stats.time("write") {
-      store.writeTable(snapCells, seq, "node_geoms", "cell", partitions)
+    val afterRows = stats.time("write") {
+      // dirty-geometry recompute, scoped to affected ways only; member
+      // coords come from the POST-merge snapshot (new locations)
+      val dirtyMembers = wayMembers.join(dirtyWays.hint("broadcast"), Seq("way_id"), "left_semi")
+      val rebuiltGeoms = GeometryBuild.buildWayGeoms(dirtyMembers, merged, withDerived = false)
+        .withColumn("cell", cell_encode(st_x(col("wkt")), st_y(col("wkt")), lit(cellRes)))
       store.writeTable(rebuiltGeoms, seq, "dirty_way_geoms", "cell", partitions)
-      store.writeStats(stats.toDF(seq), seq)
+      store.writeRanged(merged, seq, "node_geoms", "cell")
     }
+    stats.crossCheckMerge(seq, beforeRows, afterRows, expDeleted, expUpserted)
+    store.writeStats(stats.toDF(seq), seq)
     store.commit(seq)
-    (snapshot, afterRows)
+    (merged.select("id", "lon", "lat"), afterRows)
   }
 
   /**

@@ -15,8 +15,8 @@ import org.apache.spark.sql.util.QueryExecutionListener
  * consumed src/osm/OsmChangeHandler.cpp:414-418).
  *
  * Spark vehicles, chosen to avoid perturbing the measured plans:
- *  - row counts of pipeline outputs ride `Dataset.observe` (CollectMetrics
- *    operators — no extra actions, no plan barrier);
+ *  - the post-merge row count is the sum of the snapshot's lineage rows
+ *    (SnapshotStore.writeRanged), which are collected anyway;
  *  - per-action wall/plan timings come from a QueryExecutionListener
  *    attached for the lifetime of the run, attributed to the phase during
  *    which the action STARTED (an interval log makes this robust to the

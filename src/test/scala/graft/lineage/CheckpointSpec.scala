@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.GraftSparkSession
+import graft.ops.ChangeBatch
 
 /**
  * North-rule resumability: kill + resume from the last committed snapshot
@@ -110,6 +111,52 @@ class CheckpointSpec extends AnyFunSuite {
     }
     // listener captured at least one action timing
     assert(stats.exists(_._1 == "action_ns"))
+  }
+
+  test("a seq's committed stats hold its own write phase and the closure's execution") {
+    val root = Files.createTempDirectory("graft-stats-own").toString
+    val store = new SnapshotStore(root)
+    UpdateJob.run(spark, store, changes, nodeGeoms, wayMembers, 0, 0)
+    val stats = store.readStats(spark, 0)
+      .select("kind", "name").as[(String, String)].collect().toSet
+    assert(stats.contains(("phase_ms", "write")), s"no write phase in seq 0: $stats")
+    assert(stats.contains(("phase_ms", "closure")))
+    // the closure is materialized inside its own phase, so an action
+    // started there; a lazily built closure would run later, in `write`
+    assert(stats.contains(("action_ns", "closure")), s"closure ran outside its phase: $stats")
+  }
+
+  test("a wrong beforeRows fails the MERGE cross-check before the commit") {
+    val root = Files.createTempDirectory("graft-guard").toString
+    val store = new SnapshotStore(root)
+    UpdateJob.run(spark, store, changes, nodeGeoms, wayMembers, 0, 0)
+    val snapshot = store.readTable(spark, 0, "node_geoms").select("id", "lon", "lat")
+    val compacted = ChangeBatch.dedupLatestVersion(
+      ChangeBatch.classify(changes.filter($"seq" === 1L)))
+    val stats = new RunStatistics(spark)
+    val e = try intercept[IllegalArgumentException] {
+      UpdateJob.applySeq(spark, store, stats, 1L, compacted, snapshot, wayMembers,
+        beforeRows = snapshot.count() + 1, cellRes = 12, partitions = 8)
+    } finally stats.close()
+    assert(e.getMessage.contains("MERGE count cross-check failed at seq=1"), e.getMessage)
+    assert(!store.isCommitted(1L))
+    assert(store.watermark() === Some(0L))
+  }
+
+  test("a seq that dirties no way still writes dirty_way_geoms and its lineage") {
+    val root = Files.createTempDirectory("graft-empty").toString
+    val store = new SnapshotStore(root)
+    // seq 2 moves node 3 and deletes node 12; no way references either
+    UpdateJob.run(spark, store, changes, nodeGeoms, wayMembers, 2, 2)
+    assert(store.readTable(spark, 2, "dirty_way_geoms").count() === 0L)
+    val lineage = store.readLineage(spark, 2)
+    assert(lineage.filter($"stage" === "dirty_way_geoms").count() === 0L)
+    assert(lineage.filter($"stage" === "node_geoms").count() > 0L)
+    def stageSchema(stage: String) =
+      spark.read.parquet(s"$root/seq=2/lineage/stage=$stage").schema
+    assert(stageSchema("dirty_way_geoms") === stageSchema("node_geoms"))
+    assert(stageSchema("dirty_way_geoms").fieldNames.toSeq ===
+      Seq("partition_id", "cell_lo", "cell_hi", "row_count", "applied_seq"))
   }
 
   test("uncommitted sequence directory is not treated as a watermark") {
